@@ -294,7 +294,7 @@ object Bench {
       val xs = new Array[Double](n.toInt)
       Synth.state(s, n).as[(Long, Double)].collect()
         .foreach { case (i, v) => xs(i.toInt) = v }
-      graft.algo.PageRankArray.packD(xs)
+      graft.algo.ArrayLoop.Doubles.pack(xs)
     }
     var minPass = Double.MaxValue
     var i = 0

@@ -1,42 +1,33 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.{ByteBuffer, ByteOrder}
+import graft.graph.RangedCsr
 
-import graft.graph.CsrBlocks
-import graft.graph.CsrBlocks.{packL, unpackL, LabelCache}
-import graft.model.IterationMetrics
-
-/** Synchronous label propagation over per-partition flat CSR blocks with a
-  * broadcast primitive label array — the K6 broadcast-gather kernel
-  * (`/root/reference/include/graphCSR.hpp:215-249`) on the MODE "semiring":
-  * per row, gather `labels[colInd[j]]` over the neighbors and take the most
-  * frequent label, ties broken by the SMALLEST label — exactly the
-  * deterministic argmax of the DataFrame [[LabelPropagation]] (ScalaTest
-  * asserts the two paths row-identical on the bench structure), so the
-  * north rule's "label propagation assignments exact" holds on both tiers.
+/** Synchronous label propagation over cached symmetric [[RangedCsr]]
+  * blocks with a broadcast primitive label array — the K6 broadcast-gather
+  * kernel (the reference's `include/graphCSR.hpp:215-249`) on the MODE
+  * "semiring", driven by the shared [[ArrayLoop]]: per row, gather
+  * `labels[colInd[j]]` over the neighbors and take the most frequent label,
+  * ties broken by the SMALLEST label; a vertex without neighbors keeps its
+  * own. That is exactly the deterministic argmax of the DataFrame
+  * [[LabelPropagation]], so both tiers produce identical assignments.
   *
-  * WHY a second LP path (the VERDICT r04 #2 kernel tier): LP was the
-  * slowest per-iteration DataFrame lane (0.7-1.1 s/iter at 1M vertices —
-  * per-round join + histogram-aggregate shuffle). In the broadcast regime
-  * (V <= ~10^8, labels fit one executor at 8 B/vertex) a whole LP round is
-  * ONE zero-shuffle gather job over the cached CSR blocks: executors
-  * compute per-row neighbor-label modes against the broadcast array and
-  * return packed disjoint slices + a changed-count; the driver scatters
-  * (disjoint dst sets — hash partition + chunks closed at dst boundaries).
-  * No pointer compression (LP labels are NOT monotone, unlike CC's).
+  * WHY a second LP path: DataFrame LP pays a per-round join +
+  * histogram-aggregate shuffle (0.7-1.1 s/iter at 1M vertices). In the
+  * broadcast regime (labels fit in one executor: 8 B/vertex) a round is ONE
+  * zero-shuffle gather job over the cached blocks. No driver post-step: LP
+  * labels are not monotone, so there is nothing to compress.
   *
   * Per-row mode: copy neighbor labels into a reused scratch buffer, sort,
-  * scan runs — O(deg log deg) with zero allocation beyond the scratch
-  * growth, and the ascending scan picks the smallest label on count ties
-  * for free. (A hash histogram is O(deg) but allocation- and probe-heavy at
-  * web-graph degrees; sort wins on cache behavior for deg <= ~10^4.)
+  * scan runs — O(deg log deg) with no allocation beyond the scratch growth,
+  * and the ascending scan picks the smallest label on count ties for free.
+  * (A hash histogram is O(deg) but allocation- and probe-heavy at web-graph
+  * degrees; sort wins on cache behavior for deg <= ~10^4.)
   *
   * Convergence: sync LP can 2-cycle on bipartite structures (see
-  * [[LabelPropagation]]), so the loop stops on "no label changed" OR
-  * maxIter; the changed-count is exact (summed per block), and determinism
-  * guarantees the same final assignment for the same (graph, maxIter) —
-  * matching the DataFrame path iteration for iteration.
+  * [[LabelPropagation]]), so the loop stops on "no label changed" (the exact
+  * per-block changed-counts sum to zero) OR maxIter — matching the
+  * DataFrame path iteration for iteration.
   */
 object LabelPropagationArray {
 
@@ -45,76 +36,40 @@ object LabelPropagationArray {
       edges: DataFrame,
       nVertices: Long,
       maxIter: Int = 20): LabelPropagation.Result = {
-    require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
-    val n = nVertices.toInt
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    val (blocks, dstsByPart, nEdges) = CsrBlocks.build(edges, nVertices, nParts)
-
-    val sc = spark.sparkContext
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[IterationMetrics]
-    var x = Array.tabulate(n)(_.toLong) // label = own id
-    var iter = 0
-    var changed = Long.MaxValue
-    while (iter < maxIter && changed > 0) {
-      val t0 = System.nanoTime()
-      val bc = sc.broadcast(packL(x))
-      val bcId = bc.id
-      val slices = blocks.map { b =>
-        val xs = LabelCache.longs(bcId, bc.value)
-        val out = new Array[Long](b.dsts.length)
-        var scratch = new Array[Long](1024)
-        var ch = 0L
-        var r0 = 0
-        while (r0 < b.dsts.length) {
-          val own = xs(b.dsts(r0).toInt)
-          val beg = b.rowPtr(r0); val end = b.rowPtr(r0 + 1)
-          val deg = end - beg
-          if (scratch.length < deg)
-            scratch = new Array[Long](Integer.highestOneBit(deg - 1) << 1)
-          var i = beg
-          while (i < end) { scratch(i - beg) = xs(b.colInd(i)); i += 1 }
-          java.util.Arrays.sort(scratch, 0, deg)
-          // run-length scan, first strict max wins -> smallest label on ties
-          var best = own; var bestCnt = 0
-          var j = 0
-          while (j < deg) {
-            var k = j + 1
-            while (k < deg && scratch(k) == scratch(j)) k += 1
-            if (k - j > bestCnt) { bestCnt = k - j; best = scratch(j) }
-            j = k
-          }
-          out(r0) = best
-          if (best != own) ch += 1
-          r0 += 1
+    val (blocks, nEdges) =
+      RangedCsr.cache(RangedCsr.buildSymmetric(edges, nVertices, nParts))
+    val (labels, metrics) = ArrayLoop.run(blocks, ArrayLoop.Longs,
+      Array.tabulate(nVertices.toInt)(_.toLong), nEdges, "BroadcastArrayMode",
+      maxIter, tol = 1.0, sumDelta = true) { _ => (b, xs, out) =>
+      var scratch = new Array[Long](1024)
+      var ch = 0L
+      var r = 0
+      while (r < out.length) {
+        val own = xs(b.base + r)
+        val beg = b.rowPtr(r); val end = b.rowPtr(r + 1)
+        val deg = end - beg
+        if (scratch.length < deg)
+          scratch = new Array[Long](Integer.highestOneBit(deg - 1) << 1)
+        var i = beg
+        while (i < end) { scratch(i - beg) = xs(b.colInd(i)); i += 1 }
+        java.util.Arrays.sort(scratch, 0, deg)
+        // run-length scan, first strict max wins -> smallest label on ties
+        var best = own; var bestCnt = 0
+        var j = 0
+        while (j < deg) {
+          var k = j + 1
+          while (k < deg && scratch(k) == scratch(j)) k += 1
+          if (k - j > bestCnt) { bestCnt = k - j; best = scratch(j) }
+          j = k
         }
-        (packL(out), ch)
-      }.collect()
-      bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
-      val next = x.clone() // uncovered (isolated) vertices keep their label
-      // disjoint per-block dst sets -> racefree parallel plain assign
-      java.util.stream.IntStream.range(0, slices.length).parallel().forEach { pi =>
-        val ids = dstsByPart(pi); val vs = unpackL(slices(pi)._1)
-        var i = 0
-        while (i < ids.length) { next(ids(i).toInt) = vs(i); i += 1 }
+        out(r) = best
+        if (best != own) ch += 1
+        r += 1
       }
-      changed = slices.foldLeft(0L)(_ + _._2)
-      x = next
-      val secs = (System.nanoTime() - t0) / 1e9
-      metrics += IterationMetrics(iter + 1, nEdges, secs,
-        if (secs > 0) nEdges / secs else 0.0, changed.toDouble,
-        "BroadcastArrayMode")
-      iter += 1
+      ch.toDouble
     }
     blocks.unpersist()
-
-    // driver-boxing-free handoff (the PageRankArray.stateDf pattern)
-    import spark.implicits._
-    val bc = sc.broadcast(packL(x))
-    val labels = spark.range(n.toLong).as[Long].mapPartitions { it =>
-      val bb = ByteBuffer.wrap(bc.value).order(ByteOrder.LITTLE_ENDIAN)
-      it.map(i => (i, bb.getLong(8 * i.toInt)))
-    }.toDF("id", "label")
-    LabelPropagation.Result(labels, metrics.toSeq)
+    LabelPropagation.Result(ArrayLoop.toDf(spark, ArrayLoop.Longs, labels, "label"), metrics)
   }
 }

@@ -2,119 +2,39 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import java.nio.{ByteBuffer, ByteOrder}
 import graft.exec.IterConfig
+import graft.graph.RangedCsr
 import graft.model.IterationMetrics
 
-/** PageRank over per-partition FLAT CSR blocks with a broadcast primitive-
+/** PageRank over cached [[RangedCsr]] blocks with a broadcast primitive-
   * array state — the reference's K6 broadcast-gather kernel
-  * (`/root/reference/include/graphCSR.hpp:215-249`: per row, gather
-  * `weights[colInd[j]]` and multiply-accumulate) expressed as a typed
-  * per-partition loop over exactly the reference's CSR layout
-  * (rowPtr/colInd/val, `include/graphCSR.hpp:382-384`).
+  * (`include/graphCSR.hpp:215-249`: per row, gather
+  * `weights[colInd[j]]` and multiply-accumulate) on the sum-product
+  * semiring, driven by the shared [[ArrayLoop]].
   *
-  * WHY this exists (SURVEY.md §4.1 committed to "primitive-map gather in
-  * typed mapPartitions ONLY if the codegen aggregate proves slow"): the
-  * DataFrame join+aggregate iteration pays row serialization, hash-table
-  * inserts, and cache decompression per edge. This kernel iterates flat
-  * primitive arrays (one CSR block per partition, RDD MEMORY_ONLY cache —
-  * no per-iteration decode, no per-row object headers) against a state
-  * array indexed by the dense vertex id; the inner loop is a multiply-add
-  * stream at ~ns/edge.
+  * Build (once): the O(V) out-weight aggregate is collected into a
+  * primitive double[] and broadcast, and [[RangedCsr.buildWeighted]]
+  * normalizes each edge by an array lookup while packing it into its
+  * destination's id range. Row r of the block at `base` is vertex
+  * `base + r`, so every vertex — zero in-degree ones included — is computed
+  * in a task.
   *
-  * PER-ITERATION PROTOCOL (round 3: the measured bound was O(V) driver
-  * serde, not the kernel — VERDICT r02 "What's wrong #1"):
-  *   1. driver computes the dangling mass and the additive `base` term from
-  *      the CURRENT state (an O(#dangling) loop, zero for link graphs with
-  *      full out-degree), packs the state into a native-order byte[] (a
-  *      bulk memcpy — serializer-independent, so no Kryo/JavaSerializer
-  *      float-by-float loop), and torrent-broadcasts the bytes;
-  *   2. each task unpacks the state ONCE PER EXECUTOR per iteration (a
-  *      keyed cache — 32 local tasks share one 16 MB unpack), runs the CSR
-  *      gather, applies base + damping INSIDE the task, computes its
-  *      partial convergence delta against the old state, and returns a
-  *      byte-packed slice of the NEXT state (≤ V/P values, under the 1 MB
-  *      direct-task-result fast path at bench shapes);
-  *   3. the driver scatters the slices (disjoint dst SETS: dsts are hash-
-  *      partitioned across Spark partitions and each partition builds ONE
-  *      block, so every dst lives in exactly one
-  *      block — the scatter runs in parallel) and folds in the delta
-  *      contributions of in-degree-0 vertices.
-  * Driver work per iteration is two O(V) memcpys + an O(V/P)-parallel
-  * scatter; everything O(E) and every reduction is executor-side.
+  * Per iteration (see [[ArrayLoop]]): the driver folds the dangling mass
+  * (an O(#dangling) loop) into the additive base term, the tasks compute
+  * `base + d * Σ w·x[src]` per row plus their partial L1/L-inf delta
+  * against the broadcast state, and the driver copies the slices into the
+  * next state at each block's base.
   *
-  * `floatPrecision = true` switches the whole pipeline (CSR values, state,
-  * broadcast, slices) to Float — the REFERENCE'S OWN precision
-  * (`graphCOO.hpp:20-21` uses float) — halving serde and kernel memory
-  * traffic; use it for baseline-parity lanes, keep doubles (default) for
-  * engine results (north rule compares allclose 1e-6 in double).
+  * `floatPrecision = true` runs CSR values, state, broadcast and slices in
+  * Float — the reference's own precision (`graphCOO.hpp:20-21`) — halving
+  * serde and kernel memory traffic; the default doubles are the engine's
+  * result precision (allclose 1e-6).
   *
-  * Scope: the BROADCAST REGIME ONLY — V must fit in executor+driver memory
-  * (~8 B/vertex, fine to ~10^8 locally). Beyond that, the DataFrame
-  * ShuffleJoin path in [[PageRank]] is the 10^12-vertex design; this is the
-  * small-V accelerator, selected explicitly (`bucketed`/strategy knobs in
-  * the bench harness). Measured crossover context on this box (r02): DF
-  * broadcast rebuilds the hashed relation per iteration (N→4N efficiency
-  * 0.28 but 4.45 s/iter at 2^21) vs ShuffleJoin (0.84 efficiency, 16.9
-  * s/iter) — hence [[graft.exec.GatherStrategy.Auto]]'s 4M-vertex switch.
+  * Scope: the broadcast regime only — V must fit in driver and executor
+  * memory (~8 B/vertex). Beyond that, the DataFrame ShuffleJoin path in
+  * [[PageRank]] is the 10^12-vertex design.
   */
 object PageRankArray {
-
-  /** One partition's in-adjacency as flat CSR: row r gathers from
-    * colInd[rowPtr(r) until rowPtr(r+1)] with weights colVal (double) or
-    * colValF (float) — exactly one of the two is populated. */
-  final case class CsrBlock(
-      dsts: Array[Long],
-      rowPtr: Array[Int],
-      colInd: Array[Int],
-      colVal: Array[Double],
-      colValF: Array[Float])
-
-  // ---- byte packing (bulk copies, serializer-independent). Pinned
-  // LITTLE_ENDIAN, not nativeOrder: the packed state crosses JVM boundaries
-  // (driver <-> executors), so the wire format must not depend on the
-  // architecture either end happens to run on. On x86/ARM64 LE == native,
-  // so the pin costs nothing on the hot path. ----
-
-  private[graft] def packD(x: Array[Double]): Array[Byte] = {
-    val b = new Array[Byte](x.length * 8)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().put(x)
-    b
-  }
-  private[graft] def unpackD(b: Array[Byte]): Array[Double] = {
-    val x = new Array[Double](b.length / 8)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().get(x)
-    x
-  }
-  private[graft] def packF(x: Array[Float]): Array[Byte] = {
-    val b = new Array[Byte](x.length * 4)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer().put(x)
-    b
-  }
-  private[graft] def unpackF(b: Array[Byte]): Array[Float] = {
-    val x = new Array[Float](b.length / 4)
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).asFloatBuffer().get(x)
-    x
-  }
-
-  /** Once-per-executor-per-iteration unpack of the broadcast state: all
-    * tasks of one iteration share a single unpacked array (keyed by the
-    * broadcast id, which is unique per iteration). A stale or foreign key
-    * just re-unpacks — correctness never depends on a hit. */
-  private object StateCache {
-    private var key = -1L
-    private var f: Array[Float] = _
-    private var d: Array[Double] = _
-    def floats(id: Long, bytes: Array[Byte]): Array[Float] = synchronized {
-      if (key != id || f == null) { f = unpackF(bytes); d = null; key = id }
-      f
-    }
-    def doubles(id: Long, bytes: Array[Byte]): Array[Double] = synchronized {
-      if (key != id || d == null) { d = unpackD(bytes); f = null; key = id }
-      d
-    }
-  }
 
   def run(
       spark: SparkSession,
@@ -126,27 +46,12 @@ object PageRankArray {
       floatPrecision: Boolean = false): PageRank.Result = {
     require(nVertices <= Int.MaxValue, "broadcast-array kernel needs V <= 2^31")
     val n = nVertices.toInt
-    import spark.implicits._
 
-    // one-time CSR build (in-neighbor orientation; reference C1+C2), cached
-    // DESERIALIZED as one flat block per partition: iterations touch
-    // primitive arrays directly — no columnar decode, no object-per-vertex.
-    //
-    // r06 fast path (guide §2.3/§3.1; measured with graft.bench.BuildProbe,
-    // before/after in OPTIMIZATION_r06.md): the normalize JOIN is gone —
-    // the O(V) out-weight aggregate is collected into a primitive double[]
-    // and broadcast, so normalization is an array lookup inside the build's
-    // map tasks (no driver-side hashed relation, no per-edge join probe) —
-    // and the O(E) exchange ships packed 12-16 B/edge column blobs through
-    // a RANGE partitioner instead of 32 B/edge UnsafeRows through a hash
-    // exchange (graft.graph.RangedCsr: bulk-memcpy serde both sides, and
-    // the downstream CSR grouping indexes rows by (dst - base) — no
-    // per-edge hash map at all).
+    // out-weights collected as packed per-partition primitive arrays — no
+    // per-row Row/tuple boxing on the driver at V=10^6-10^8
     val outW = edges.groupBy("src").agg(
       (if (weighted) sum("w") else count(lit(1)).cast("double")).as("wtot"))
       .filter(col("wtot") > 0) // wtot<=0 -> dangling, not NaN (see PageRank)
-    // collect (src, wtot) as packed per-partition primitive arrays — no
-    // per-row Row/tuple boxing on the driver at V=10^6-10^8
     val wtotArr = new Array[Double](n)
     outW.queryExecution.toRdd.mapPartitions { it =>
       var ids = new Array[Int](1024)
@@ -169,220 +74,80 @@ object PageRankArray {
       while (i < ids.length) { wtotArr(ids(i)) = ws(i); i += 1 }
     }
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val useFloat = floatPrecision
     val wtotBc = spark.sparkContext.broadcast(wtotArr)
     val sel = edges.select(col("dst").cast("long"), col("src").cast("long"),
       (if (weighted) col("w") else lit(1.0)).cast("double"))
-    val blocks = graft.graph.RangedCsr
-      .buildWeighted(sel, n, nParts, useFloat, wtotBc)
-      .persist(StorageLevel.MEMORY_ONLY)
-    // truncate lineage: without this every per-iteration job re-serializes
-    // the whole upstream Catalyst/RDD graph into its task binary (measured
-    // ~200 ms/iteration at 403M edges — 3x the kernel+scheduling floor)
-    blocks.localCheckpoint()
-    // per-partition dst ids are closed-form under the range contract
-    // (partition p owns [p*chunk, p*chunk+len)): no collect job
-    val dstsByPart: Array[Array[Long]] = graft.graph.RangedCsr.rangeIds(n, nParts)
-    // edge count off the blocks — the one action that materializes the
-    // cache + checkpoint. Counts normalized edges (out-edges of wtot>0
-    // srcs) — exactly the edges each iteration processes.
-    val nEdges = blocks.map(_.colInd.length.toLong).fold(0L)(_ + _)
+    // nEdges counts normalized edges (out-edges of wtot > 0 srcs) — exactly
+    // the edges each iteration processes
+    val (blocks, nEdges) =
+      RangedCsr.cache(RangedCsr.buildWeighted(sel, n, nParts, floatPrecision, wtotBc))
 
     // dangling vertices (no positive-weight out-edge): their mass re-enters
-    // uniformly each iteration; wtotArr(v) == 0.0 IS "no positive out-weight"
-    // (the aggregate only populated wtot > 0 entries). O(#dangling) per
-    // iteration driver loop.
-    val danglingIds: Array[Int] = {
-      val b = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var v = 0
-      while (v < n) { if (wtotArr(v) <= 0) b += v; v += 1 }
-      b.toArray
-    }
-    // full-range blocks cover EVERY vertex (zero-in-degree rows compute
-    // base + d*0 = base in-task, matching the old driver-side fill): the
-    // uncovered set is empty by construction.
-    val uncoveredIds: Array[Int] = Array.emptyIntArray
+    // uniformly each iteration
+    val danglingIds: Array[Int] =
+      java.util.stream.IntStream.range(0, n).filter(v => wtotArr(v) <= 0).toArray
 
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[IterationMetrics]
-    val x: Array[Double] =
-      if (useFloat) {
-        val xf = iterateF(spark, blocks, dstsByPart, danglingIds, uncoveredIds,
-          n, nVertices, damping, cfg, metrics, nEdges)
-        val xd = new Array[Double](n)
-        var i = 0
-        while (i < n) { xd(i) = xf(i).toDouble; i += 1 }
-        xd
+    val l1 = cfg.norm == "l1" // scale-free convergence (see IterConfig)
+    def loop[A](codec: ArrayLoop.Codec[A], init: A, strategy: String)(
+        kernelFor: A => ArrayLoop.Kernel[A]): (DataFrame, Seq[IterationMetrics]) = {
+      val (x, metrics) = ArrayLoop.run(blocks, codec, init, nEdges, strategy,
+        cfg.maxIter, cfg.tol, sumDelta = l1)(kernelFor,
+        after = (x: A, iter: Int, delta: Double) => cfg.snapshotDir.foreach { dir =>
+          if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol)
+            graft.exec.Iterate.snapshot(dir, ArrayLoop.toDf(spark, codec, x, "x"), iter, delta)
+        })
+      (ArrayLoop.toDf(spark, codec, x, "x"), metrics)
+    }
+    val (state, metrics) =
+      if (floatPrecision) {
+        val d = damping.toFloat
+        loop(ArrayLoop.Floats,
+          Array.fill(n)((1.0 / nVertices).toFloat), "BroadcastArrayF32") { x =>
+          var dm = 0.0
+          var di = 0
+          while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
+          val base = ((1.0 - damping) / nVertices + damping * dm / nVertices).toFloat
+          (b, xs, out) => {
+            var pd = 0.0
+            var r = 0
+            while (r < out.length) {
+              var s = 0.0f
+              var i = b.rowPtr(r); val end = b.rowPtr(r + 1)
+              while (i < end) { s += b.colValF(i) * xs(b.colInd(i)); i += 1 }
+              val nv = base + d * s
+              out(r) = nv
+              val dd = math.abs((nv - xs(b.base + r)).toDouble)
+              if (l1) pd += dd else if (dd > pd) pd = dd
+              r += 1
+            }
+            pd
+          }
+        }
       } else {
-        iterateD(spark, blocks, dstsByPart, danglingIds, uncoveredIds,
-          n, nVertices, damping, cfg, metrics, nEdges)
+        loop(ArrayLoop.Doubles,
+          Array.fill(n)(1.0 / nVertices), "BroadcastArray") { x =>
+          var dm = 0.0
+          var di = 0
+          while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
+          val base = (1.0 - damping) / nVertices + damping * dm / nVertices
+          (b, xs, out) => {
+            var pd = 0.0
+            var r = 0
+            while (r < out.length) {
+              var s = 0.0
+              var i = b.rowPtr(r); val end = b.rowPtr(r + 1)
+              while (i < end) { s += b.colVal(i) * xs(b.colInd(i)); i += 1 }
+              val nv = base + damping * s
+              out(r) = nv
+              val dd = math.abs(nv - xs(b.base + r))
+              if (l1) pd += dd else if (dd > pd) pd = dd
+              r += 1
+            }
+            pd
+          }
+        }
       }
     blocks.unpersist()
-    PageRank.Result(stateDf(spark, x), metrics.toSeq,
-      graft.exec.GatherStrategy.BroadcastState)
-  }
-
-  /** Double-precision iteration loop (engine default). */
-  private def iterateD(
-      spark: SparkSession,
-      blocks: org.apache.spark.rdd.RDD[CsrBlock],
-      dstsByPart: Array[Array[Long]],
-      danglingIds: Array[Int],
-      uncoveredIds: Array[Int],
-      n: Int, nVertices: Long, damping: Double, cfg: IterConfig,
-      metrics: scala.collection.mutable.ArrayBuffer[IterationMetrics],
-      nEdges: Long): Array[Double] = {
-    val sc = spark.sparkContext
-    val l1 = cfg.norm == "l1" // scale-free convergence (see IterConfig)
-    var x = Array.fill(n)(1.0 / nVertices)
-    var next = new Array[Double](n)
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
-      var dm = 0.0
-      var di = 0
-      while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
-      val base = (1.0 - damping) / nVertices + damping * dm / nVertices
-      val bc = sc.broadcast(packD(x))
-      val bcId = bc.id
-      val d = damping
-      val slices = blocks.map { b =>
-        val xs = StateCache.doubles(bcId, bc.value)
-        val out = new Array[Double](b.dsts.length)
-        var pd = 0.0
-        var r0 = 0
-        while (r0 < b.dsts.length) {
-          var s = 0.0
-          var i = b.rowPtr(r0); val end = b.rowPtr(r0 + 1)
-          while (i < end) { s += b.colVal(i) * xs(b.colInd(i)); i += 1 }
-          val nv = base + d * s
-          out(r0) = nv
-          val dd = math.abs(nv - xs(b.dsts(r0).toInt))
-          if (l1) pd += dd else if (dd > pd) pd = dd
-          r0 += 1
-        }
-        (packD(out), pd)
-      }.collect()
-      bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
-      java.util.Arrays.fill(next, base)
-      val nx = next
-      // every dst lives in exactly ONE block (hash repartition on dst,
-      // one block per partition) -> blocks write disjoint index
-      // sets and the scatter is a racefree parallel plain assign
-      java.util.stream.IntStream.range(0, slices.length).parallel().forEach { pi =>
-        val ids = dstsByPart(pi); val vs = unpackD(slices(pi)._1)
-        var i = 0
-        while (i < ids.length) { nx(ids(i).toInt) = vs(i); i += 1 }
-      }
-      delta = if (l1) slices.map(_._2).sum else slices.foldLeft(0.0)((a, s) => math.max(a, s._2))
-      var ui = 0
-      while (ui < uncoveredIds.length) {
-        val dd = math.abs(base - x(uncoveredIds(ui)))
-        if (l1) delta += dd else if (dd > delta) delta = dd
-        ui += 1
-      }
-      val tmp = x; x = next; next = tmp
-      val secs = (System.nanoTime() - t0) / 1e9
-      metrics += IterationMetrics(iter + 1, nEdges, secs,
-        if (secs > 0) nEdges / secs else 0.0, delta, "BroadcastArray")
-      iter += 1
-      cfg.snapshotDir.foreach { dir =>
-        if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol)
-          graft.exec.Iterate.snapshot(dir, stateDf(spark, x), iter, delta)
-      }
-    }
-    x
-  }
-
-  /** Float iteration loop — the reference's own precision; halves the
-    * broadcast/slice serde and the kernel's value+state memory traffic. */
-  private def iterateF(
-      spark: SparkSession,
-      blocks: org.apache.spark.rdd.RDD[CsrBlock],
-      dstsByPart: Array[Array[Long]],
-      danglingIds: Array[Int],
-      uncoveredIds: Array[Int],
-      n: Int, nVertices: Long, damping: Double, cfg: IterConfig,
-      metrics: scala.collection.mutable.ArrayBuffer[IterationMetrics],
-      nEdges: Long): Array[Float] = {
-    val sc = spark.sparkContext
-    val l1 = cfg.norm == "l1"
-    var x = Array.fill(n)((1.0 / nVertices).toFloat)
-    var next = new Array[Float](n)
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < cfg.maxIter && delta >= cfg.tol) {
-      val t0 = System.nanoTime()
-      var dm = 0.0
-      var di = 0
-      while (di < danglingIds.length) { dm += x(danglingIds(di)); di += 1 }
-      val base = ((1.0 - damping) / nVertices + damping * dm / nVertices).toFloat
-      val bc = sc.broadcast(packF(x))
-      val bcId = bc.id
-      val d = damping.toFloat
-      val slices = blocks.map { b =>
-        val xs = StateCache.floats(bcId, bc.value)
-        val out = new Array[Float](b.dsts.length)
-        var pd = 0.0
-        var r0 = 0
-        while (r0 < b.dsts.length) {
-          var s = 0.0f
-          var i = b.rowPtr(r0); val end = b.rowPtr(r0 + 1)
-          while (i < end) { s += b.colValF(i) * xs(b.colInd(i)); i += 1 }
-          val nv = base + d * s
-          out(r0) = nv
-          val dd = math.abs((nv - xs(b.dsts(r0).toInt)).toDouble)
-          if (l1) pd += dd else if (dd > pd) pd = dd
-          r0 += 1
-        }
-        (packF(out), pd)
-      }.collect()
-      bc.unpersist(false) // non-blocking (destroy() is a blocking RPC per iteration)
-      java.util.Arrays.fill(next, base)
-      val nx = next
-      // disjoint per-block dst sets (see iterateD) -> parallel plain assign
-      java.util.stream.IntStream.range(0, slices.length).parallel().forEach { pi =>
-        val ids = dstsByPart(pi); val vs = unpackF(slices(pi)._1)
-        var i = 0
-        while (i < ids.length) { nx(ids(i).toInt) = vs(i); i += 1 }
-      }
-      delta = if (l1) slices.map(_._2).sum else slices.foldLeft(0.0)((a, s) => math.max(a, s._2))
-      var ui = 0
-      while (ui < uncoveredIds.length) {
-        val dd = math.abs((base - x(uncoveredIds(ui))).toDouble)
-        if (l1) delta += dd else if (dd > delta) delta = dd
-        ui += 1
-      }
-      val tmp = x; x = next; next = tmp
-      val secs = (System.nanoTime() - t0) / 1e9
-      metrics += IterationMetrics(iter + 1, nEdges, secs,
-        if (secs > 0) nEdges / secs else 0.0, delta, "BroadcastArrayF32")
-      iter += 1
-      cfg.snapshotDir.foreach { dir =>
-        if (iter % cfg.snapshotEvery == 0 || delta < cfg.tol) {
-          val xd = new Array[Double](n)
-          var i = 0
-          while (i < n) { xd(i) = x(i).toDouble; i += 1 }
-          graft.exec.Iterate.snapshot(dir, stateDf(spark, xd), iter, delta)
-        }
-      }
-    }
-    x
-  }
-
-  /** Result handoff WITHOUT driver-side boxing: the old
-    * `parallelize(x.zipWithIndex)` allocated O(V) Tuple2 + boxed Double on
-    * the driver heap — a memory spike at the kernel's ~10^8-vertex ceiling
-    * (VERDICT r03 "What's wrong #3"). Here the state ships once as the
-    * already-packed byte[] (torrent broadcast), and each `range` partition
-    * reads its values straight out of the buffer — O(V/P) rows per task,
-    * zero driver-side per-vertex allocation. */
-  private def stateDf(spark: SparkSession, x: Array[Double]): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(packD(x))
-    spark.range(x.length.toLong).as[Long].mapPartitions { it =>
-      val bb = ByteBuffer.wrap(bc.value).order(ByteOrder.LITTLE_ENDIAN)
-      it.map(i => (i, bb.getDouble(8 * i.toInt)))
-    }.toDF("id", "x")
+    PageRank.Result(state, metrics, graft.exec.GatherStrategy.BroadcastState)
   }
 }

@@ -224,8 +224,8 @@ object SpmvLayouts {
 
   /** One SpMV pass: flow[src] = Σ_{(src -> dst, w)} w * x[dst] — identical
     * semantics to [[SpMV]] (the K2 oracle), on the padded/dense kernels.
-    * State ships as ONE packed broadcast (same wire protocol as
-    * [[PageRankArray]]); each block computes its rows and emits (id, x). */
+    * State ships as ONE packed broadcast (the [[ArrayLoop]] wire codec);
+    * each block computes its rows and emits (id, x). */
   def spmv(
       spark: SparkSession,
       built: Built,
@@ -237,7 +237,7 @@ object SpmvLayouts {
     state.select(col("id"), col("x"))
       .as[(Long, Double)].collect()
       .foreach { case (i, v) => xs(i.toInt) = v }
-    spmvPacked(spark, built, PageRankArray.packD(xs), vertices)
+    spmvPacked(spark, built, ArrayLoop.Doubles.pack(xs), vertices)
   }
 
   /** Same pass, state pre-packed by the caller — the multi-pass bench lanes
@@ -254,7 +254,7 @@ object SpmvLayouts {
     val transposed = built.layout == EllpackT
     val flowRdd = built.blocks.mapPartitions { it =>
       it.flatMap { b =>
-        val x = PageRankArray.unpackD(bc.value)
+        val x = ArrayLoop.Doubles.unpack(bc.value)
         val nRows = b.rows.length
         val out = new Array[Double](nRows)
         if (isDense) {

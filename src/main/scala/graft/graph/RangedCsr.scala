@@ -4,60 +4,66 @@ import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import java.nio.{ByteBuffer, ByteOrder}
 
-import graft.algo.PageRankArray.CsrBlock
-
-/** Packed-binary RANGE-partitioned CSR-block builder — the shared fast path
-  * behind the broadcast-array kernels' one-time builds (r06 optimization).
+/** Id-ranged flat CSR blocks — the cached graph behind every broadcast-array
+  * tier ([[graft.algo.ArrayLoop]]) — and their packed-binary,
+  * range-partitioned build.
   *
-  * WHY (guide §2.3 "shuffle fewer bytes" + §1.2 "per-task work first"): the
-  * r05 builds moved every edge through a Catalyst `repartition(n, col)`
-  * exchange as an UnsafeRow — 8 B null-bits + 8 B per field = 32 B/edge on
-  * the wire, plus per-row hash/copy/serde CPU on both sides (measured with
-  * `graft.bench.BuildProbe` at 403M edges, r06 baseline: 162 s summed task
-  * time map-side, 138 s reduce-side; the whole quiet build 17.2 s wall).
-  * Here each upstream task packs its edges into per-target primitive column
-  * buffers and ships them as FEW LARGE BLOBS (4 B dst + 4 B src + 0/4/8 B
-  * value = 8-16 B/edge, serialized as one `byte[]` memcpy); the target
-  * partition is a RANGE of key ids (`key / chunk`), so the downstream build
-  * needs NO per-edge hash map — the row index is `key - base`, a plain
-  * array offset, and the two-pass histogram+scatter runs over primitive
-  * arrays end to end.
+  * Block contract: with chunk = ceil(V / P), partition p holds one
+  * [[RangedCsr.CsrBlock]] with `base` = p*chunk covering the id range
+  * [base, min(V, base + chunk)); row r of the block is vertex `base + r`.
+  * Every vertex in [0, V) has exactly one row (a vertex without in-edges has
+  * rowPtr(r) == rowPtr(r+1)), and partitions whose range starts at or past V
+  * hold no block. So a kernel's per-block output is a contiguous id run the
+  * driver copies into the next state at `base`, and the blocks' outputs
+  * together cover the whole state.
+  *
+  * Build: each upstream task packs its edges into per-target primitive
+  * column buffers and ships them as FEW LARGE BLOBS (4 B key + 4 B payload
+  * + 0/4/8 B value = 8-16 B/edge, serialized as one `byte[]` memcpy) instead
+  * of 32 B/edge UnsafeRows through a Catalyst exchange. The target partition
+  * is `key / chunk`, so the downstream build needs NO per-edge hash map: the
+  * row index is `key - base`, and a two-pass histogram+scatter runs over
+  * primitive arrays end to end.
   *
   * Range (not hash) partitioning trades generic skew-robustness for the
-  * zero-probe build; that is the right trade for this tier: the kernels'
-  * scale contract is the broadcast regime (V fits in memory), the bench
-  * graphs' in-degree is id-uniform, and a skewed id RANGE would have skewed
-  * the per-block kernel time under hash partitioning too (same rows, other
-  * partitions). The 10^12-vertex design path (ShuffleJoin DataFrames) is
-  * unaffected.
-  *
-  * Block contract: partition p covers the FULL key range
-  * [p*chunk, min(n, (p+1)*chunk)) — every vertex in range gets a row (rows
-  * without edges have rowPtr(r) == rowPtr(r+1)), so the per-iteration
-  * slices are contiguous id runs and the kernels' "uncovered vertex"
-  * driver-side pass is empty. A row's value for an empty row is exactly
-  * what the old driver-side fill produced (base term resp. own label), so
-  * results are bit-identical to the hash-partitioned r05 build up to
-  * intra-row float summation order (all oracle outputs round to >= 6
-  * decimals before comparison).
+  * zero-probe build; that is the right trade for this tier: its scale
+  * contract is the broadcast regime (V fits in memory), and a skewed id
+  * range skews the per-block kernel time under any row partitioning. The
+  * 10^12-vertex design path (ShuffleJoin DataFrames) is unaffected.
   */
 object RangedCsr {
+
+  /** One id range's in-adjacency as flat CSR (the reference's rowPtr/colInd/
+    * val layout, `include/graphCSR.hpp:382-384`): row r is vertex
+    * `base + r` and gathers from colInd[rowPtr(r) until rowPtr(r+1)] with
+    * weights colVal (double) or colValF (float) — at most one of the two is
+    * populated; the label tiers' symmetric blocks carry neither. */
+  final case class CsrBlock(
+      base: Int,
+      rowPtr: Array[Int],
+      colInd: Array[Int],
+      colVal: Array[Double],
+      colValF: Array[Float]) {
+    def rows: Int = rowPtr.length - 1
+  }
 
   /** Keys-per-partition chunk: ceil(n / nParts). */
   def chunkFor(n: Int, nParts: Int): Int =
     math.max(1, ((n.toLong + nParts - 1) / nParts).toInt)
 
-  /** Contiguous per-partition id arrays for the driver-side slice scatter —
-    * closed form under the range contract, no collect job. */
-  def rangeIds(n: Int, nParts: Int): Array[Array[Long]] = {
-    val chunk = chunkFor(n, nParts)
-    Array.tabulate(nParts) { p =>
-      val base = p.toLong * chunk
-      val len = math.max(0L, math.min(chunk.toLong, n - base)).toInt
-      Array.tabulate(len)(i => base + i)
-    }
+  /** Persist the blocks deserialized, cut their lineage, and materialize
+    * them; returns the cached blocks and their edge count. The cut matters:
+    * without it every per-iteration job re-serializes the whole upstream
+    * Catalyst/RDD graph into its task binary (measured ~200 ms/iteration at
+    * 403M edges). Caller unpersists. */
+  def cache(blocks: RDD[CsrBlock]): (RDD[CsrBlock], Long) = {
+    val cached = blocks.persist(StorageLevel.MEMORY_ONLY)
+    cached.localCheckpoint()
+    (cached, cached.map(_.colInd.length.toLong).fold(0L)(_ + _))
   }
 
   final class IdPartitioner(n: Int) extends Partitioner {
@@ -227,8 +233,8 @@ object RangedCsr {
 
   /** In-neighbor CSR blocks with normalized values: key = dst, payload =
     * src, value = w / wtot(src) (rows whose src has wtot <= 0 dropped —
-    * identical to the old `filter(wtot > 0)` + inner-join semantics).
-    * Caller persists/checkpoints. */
+    * identical to the `filter(wtot > 0)` + inner-join semantics of the
+    * DataFrame tier). Caller caches. */
   def buildWeighted(
       edges: DataFrame, // pre-projected (dst LONG, src LONG, w DOUBLE)
       n: Int, nParts: Int, useFloat: Boolean,
@@ -283,24 +289,23 @@ object RangedCsr {
             }
             bi += 1
           }
-          val dsts = new Array[Long](len)
-          r = 0
-          while (r < len) { dsts(r) = base + r; r += 1 }
-          Iterator.single(CsrBlock(dsts, rowPtr, colInd, colVal, colValF))
+          Iterator.single(CsrBlock(base.toInt, rowPtr, colInd, colVal, colValF))
         }
       }, preservesPartitioning = true)
   }
 
-  /** Symmetric value-less CSR blocks (CC/LP): both orientations of every
-    * edge, self-loops dropped, per-row neighbor sets SORTED + DEDUPLICATED
-    * in place — identical neighbor sets to the old
-    * `symmetrize(...).distinct()` Catalyst plan (LP's mode counts depend on
-    * dedup; CC's min does not care). Caller persists/checkpoints. */
-  def buildSymmetric(
-      edges: DataFrame, // pre-projected (src LONG, dst LONG)
-      n: Int, nParts: Int): RDD[CsrBlock] = {
+  /** Symmetric value-less CSR blocks (CC/LP) from an edge DataFrame with
+    * `src` and `dst` columns: both orientations of every edge, self-loops
+    * dropped, per-row neighbor sets SORTED + DEDUPLICATED in place —
+    * identical neighbor sets to `symmetrize(...).distinct()` (LP's mode
+    * counts depend on dedup; CC's min does not care). Label kernels read
+    * neighbor ids only, so a block is colInd + rowPtr. Caller caches. */
+  def buildSymmetric(edges: DataFrame, nVertices: Long, nParts: Int): RDD[CsrBlock] = {
+    require(nVertices <= Int.MaxValue, "flat-block builds need V <= 2^31")
+    val n = nVertices.toInt
     val chunk = chunkFor(n, nParts)
-    blobRdd(edges, n, nParts, ValNone, null, sym = true)
+    blobRdd(edges.select(col("src").cast("long"), col("dst").cast("long")),
+      n, nParts, ValNone, null, sym = true)
       .mapPartitions({ it =>
         val pid = TaskContext.getPartitionId()
         val base = pid.toLong * chunk
@@ -360,10 +365,7 @@ object RangedCsr {
             newRowPtr(r + 1) = w0
             r += 1
           }
-          val dsts = new Array[Long](len)
-          r = 0
-          while (r < len) { dsts(r) = base + r; r += 1 }
-          Iterator.single(CsrBlock(dsts, newRowPtr,
+          Iterator.single(CsrBlock(base.toInt, newRowPtr,
             java.util.Arrays.copyOf(colInd, w0),
             Array.emptyDoubleArray, Array.emptyFloatArray))
         }

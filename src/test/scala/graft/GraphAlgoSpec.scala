@@ -143,11 +143,16 @@ class GraphAlgoSpec extends SparkSuite {
     val n = 300; val edges = Synth.blocks(spark, n, 50) // includes dangling
     val df = PageRank.run(spark, edges, n, cfg = IterConfig(tol = 0.0, maxIter = 7))
       .state.orderBy("id").as[(Long, Double)].collect()
-    val arr = graft.algo.PageRankArray.run(spark, edges, n,
-      cfg = IterConfig(tol = 0.0, maxIter = 7))
-      .state.orderBy("id").as[(Long, Double)].collect()
-    df.zip(arr).foreach { case ((i1, x1), (i2, x2)) =>
-      assert(i1 == i2 && math.abs(x1 - x2) < 1e-12, s"vertex $i1")
+    // f64 agrees to rounding; f32 (the reference's precision) to 1e-5 relative
+    for ((f32, relTol) <- Seq((false, 0.0), (true, 1e-5))) {
+      val arr = graft.algo.PageRankArray.run(spark, edges, n,
+        cfg = IterConfig(tol = 0.0, maxIter = 7), floatPrecision = f32)
+        .state.orderBy("id").as[(Long, Double)].collect()
+      assert(arr.length == n)
+      df.zip(arr).foreach { case ((i1, x1), (i2, x2)) =>
+        assert(i1 == i2 && math.abs(x1 - x2) <= math.max(1e-12, relTol * x1),
+          s"vertex $i1 (f32=$f32): $x1 vs $x2")
+      }
     }
   }
 

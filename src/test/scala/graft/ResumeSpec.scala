@@ -37,6 +37,23 @@ class ResumeSpec extends SparkSuite {
     }
   }
 
+  test("array-tier PageRank snapshots the state it returns (f64 and f32)") {
+    val n = 128L
+    val edges = Synth.band(spark, n, 6)
+    for (f32 <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft-resume-array").toString
+      val r = graft.algo.PageRankArray.run(spark, edges, n,
+        cfg = IterConfig(tol = 0.0, maxIter = 3,
+          snapshotDir = Some(dir), snapshotEvery = 1),
+        floatPrecision = f32)
+      val Some((state, iter, _)) = Iterate.resume(spark, dir)
+      assert(iter == 3, s"f32=$f32")
+      val want = r.state.orderBy("id").as[(Long, Double)].collect().toSeq
+      assert(want.length == n)
+      assert(state.orderBy("id").as[(Long, Double)].collect().toSeq == want, s"f32=$f32")
+    }
+  }
+
   test("snapshot manifest is written atomically and parses back") {
     val dir = Files.createTempDirectory("graft-manifest").toString
     val st = Seq((0L, 0.5), (1L, 0.5)).toDF("id", "x")
@@ -44,6 +61,14 @@ class ResumeSpec extends SparkSuite {
     val Some((loaded, iter, delta)) = Iterate.resume(spark, dir)
     assert(iter == 7 && math.abs(delta - 0.123) < 1e-12)
     assert(loaded.as[(Long, Double)].collect().toSet == Set((0L, 0.5), (1L, 0.5)))
+  }
+
+  test("Iterate.loop rejects a step without x_old, naming the column") {
+    val init = Seq((0L, 0.5), (1L, 0.5)).toDF("id", "x")
+    val e = intercept[IllegalArgumentException] {
+      Iterate.loop(init, IterConfig(maxIter = 1), edgesPerIter = 0L)((s, _) => s)
+    }
+    assert(e.getMessage.contains("x_old"), e.getMessage)
   }
 
   test("resume on an empty dir returns None") {

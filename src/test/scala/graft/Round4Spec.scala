@@ -142,12 +142,18 @@ class Round4Spec extends SparkSuite {
     val shf = ConnectedComponents.run(spark, edges, n2)
       .labels.orderBy("id").as[(Long, Long)].collect()
     assert(arr.sameElements(shf), "array vs shuffle CC labels differ")
-    // isolated vertices keep their own id as label
-    val n3 = 8L
-    val iso = Seq((0L, 1L, 1.0)).toDF("src", "dst", "w")
-    val a3 = ConnectedComponentsArray.run(spark, iso, n3)
-      .labels.orderBy("id").as[(Long, Long)].collect()
-    assert(a3.toSeq == Seq(0L -> 0L, 1L -> 0L) ++ (2L to 7L).map(i => i -> i))
+    // isolated vertices keep their own id as label; V=8 fills all four id
+    // ranges, V=10 leaves a short last range, V=3 an empty trailing one
+    for (n3 <- Seq(8L, 10L, 3L)) {
+      val iso = Seq((0L, 1L, 1.0)).toDF("src", "dst", "w")
+      val a3 = ConnectedComponentsArray.run(spark, iso, n3)
+        .labels.orderBy("id").as[(Long, Long)].collect()
+      assert(a3.toSeq == Seq(0L -> 0L, 1L -> 0L) ++ (2L until n3).map(i => i -> i),
+        s"V=$n3")
+      val s3 = ConnectedComponents.run(spark, iso, n3)
+        .labels.orderBy("id").as[(Long, Long)].collect()
+      assert(a3.sameElements(s3), s"array vs shuffle CC labels differ at V=$n3")
+    }
   }
 
   test("broadcast-array result handoff is distributed at V = 2^22") {

@@ -56,23 +56,42 @@ class Round6Spec extends SparkSuite {
   }
 
   test("ranged CSR build handles isolated, dangling and duplicate-edge structure") {
-    // 10 vertices: 7 isolated, one dangling src chain, a duplicate edge
-    // (accumulates), and an out-of-order id pair
-    val edges = Seq(
-      (2L, 1L, 0.5), (2L, 1L, 0.25), // duplicate: accumulates
-      (1L, 0L, 1.0),                 // 0 has in-edges, no out-edges (dangling)
-      (9L, 3L, 2.0)
-    ).toDF("src", "dst", "w")
-    val r = graft.algo.PageRankArray.run(spark, edges, 10L,
-      cfg = IterConfig(tol = 0.0, maxIter = 3))
-    val df = PageRank.run(spark, edges, 10L,
-      cfg = IterConfig(tol = 0.0, maxIter = 3),
-      strategy = GatherStrategy.ShuffleJoin)
-    val a = r.state.orderBy("id").as[(Long, Double)].collect()
-    val b = df.state.orderBy("id").as[(Long, Double)].collect()
-    assert(a.length == 10 && b.length == 10)
-    a.zip(b).foreach { case ((ia, xa), (ib, xb)) =>
-      assert(ia == ib && math.abs(xa - xb) < 1e-12, s"id $ia: $xa vs $xb")
+    import graft.algo.{ConnectedComponentsArray, LabelPropagationArray, PageRankArray}
+    // 4 shuffle partitions: V=10 ranges are 3,3,3,1 ids (short last range);
+    // V=3 ranges are 1,1,1 and one empty trailing range
+    val fixtures = Seq(
+      // 7 isolated, one dangling src chain, a duplicate edge (accumulates),
+      // and an out-of-order id pair
+      10L -> Seq(
+        (2L, 1L, 0.5), (2L, 1L, 0.25), // duplicate: accumulates
+        (1L, 0L, 1.0),                 // 0 has in-edges, no out-edges (dangling)
+        (9L, 3L, 2.0)),
+      3L -> Seq((1L, 0L, 1.0), (2L, 0L, 0.5)))
+    for ((n, es) <- fixtures) {
+      val edges = es.toDF("src", "dst", "w")
+      val cfg = IterConfig(tol = 0.0, maxIter = 3)
+      val df = PageRank.run(spark, edges, n, cfg = cfg,
+        strategy = GatherStrategy.ShuffleJoin)
+        .state.orderBy("id").as[(Long, Double)].collect()
+      assert(df.length == n)
+      for ((f32, relTol) <- Seq((false, 0.0), (true, 1e-5))) {
+        val a = PageRankArray.run(spark, edges, n, cfg = cfg, floatPrecision = f32)
+          .state.orderBy("id").as[(Long, Double)].collect()
+        assert(a.length == n)
+        a.zip(df).foreach { case ((ia, xa), (ib, xb)) =>
+          assert(ia == ib && math.abs(xa - xb) <= math.max(1e-12, relTol * xb),
+            s"V=$n f32=$f32 id $ia: $xa vs $xb")
+        }
+      }
+      def labels(d: org.apache.spark.sql.DataFrame) =
+        d.orderBy("id").as[(Long, Long)].collect().toSeq
+      val cc = labels(ConnectedComponents.run(spark, edges, n).labels)
+      assert(cc.length == n)
+      assert(labels(ConnectedComponentsArray.run(spark, edges, n).labels) == cc, s"CC V=$n")
+      val lp = labels(LabelPropagation.run(spark, edges, n, maxIter = 3).labels)
+      assert(lp.length == n)
+      assert(labels(LabelPropagationArray.run(spark, edges, n, maxIter = 3).labels) == lp,
+        s"LP V=$n")
     }
   }
 
