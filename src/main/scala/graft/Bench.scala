@@ -381,7 +381,7 @@ object Bench {
     }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.bench.StageProf.attachIfEnabled(s.sparkContext)
+    graft.bench.StageLog.attach(s)
     s
   }
 
@@ -435,7 +435,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val maxRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAXRUNS", "10").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")

@@ -6,6 +6,8 @@ import org.apache.spark.storage.StorageLevel
 import graft.exec.{IterConfig, Iterate, TaskMetricsCollector}
 import graft.graph.AdjacencyBuilder
 import graft.model.IterationMetrics
+import graft.util.LongLongMap
+import scala.collection.mutable.ArrayBuffer
 
 /** Connected components, two-phase (undirected semantics — the reference's
   * symmetric .mtx expansion, `/root/reference/lib/MMIO/mmio_cpp.h:40-48`, is
@@ -66,34 +68,8 @@ object ConnectedComponents {
       .repartitionByRange(nParts, col("src"))
       .as[(Long, Long)]
       .mapPartitions { it =>
-        // primitive open-addressing parent map: 16 B/slot, <= 23 B/vertex at
-        // the 0.7 load ceiling (vs ~60-80 B/entry for a boxed j.u.HashMap) —
-        // the per-partition memory bound of the contraction pass, the phase
-        // that must fit executor memory at the 100 TB design point.
-        val parent = new graft.util.LongLongMap(1 << 16)
-        def find(a: Long): Long = {
-          var r = a
-          while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-          var c = a
-          while (c != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
-          r
-        }
-        var nE = 0L
-        it.foreach { case (s, d) =>
-          if (!parent.contains(s)) parent.put(s, s)
-          if (!parent.contains(d)) parent.put(d, d)
-          val rs = find(s); val rd = find(d)
-          // union-by-min: the surviving root is the smaller id, so find(v)
-          // is exactly the min id of v's partition-local component
-          if (rs < rd) parent.put(rd, rs)
-          else if (rd < rs) parent.put(rs, rd)
-          nE += 1
-        }
+        val (out, nE) = minRoots(it, 1 << 16)
         edgeCount.add(nE)
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-        // find() inside foreach only path-compresses (puts to EXISTING keys:
-        // no insert, no growth), so the key-array iteration stays valid
-        parent.foreach { (v, _) => out += ((v, find(v))) }
         out.iterator
       }.toDF("id", "root")
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -138,25 +114,7 @@ object ConnectedComponents {
     val (rootLabelsDf, phase2Metrics) =
       if (nStar <= localMax) {
         val t2 = System.nanoTime()
-        import spark.implicits._
-        val pairs = contracted.as[(Long, Long)].collect()
-        val parent = new graft.util.LongLongMap(1 << 10)
-        def find(a: Long): Long = {
-          var r = a
-          while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-          var c = a
-          while (c != r) { val nx = parent.getOrDefault(c, c); parent.put(c, r); c = nx }
-          r
-        }
-        pairs.foreach { case (s, d) =>
-          if (!parent.contains(s)) parent.put(s, s)
-          if (!parent.contains(d)) parent.put(d, d)
-          val rs2 = find(s); val rd = find(d)
-          if (rs2 < rd) parent.put(rd, rs2)
-          else if (rd < rs2) parent.put(rs2, rd)
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-        parent.foreach { (v, _) => out += ((v, find(v))) }
+        val (out, _) = minRoots(contracted.as[(Long, Long)].collect().iterator, 1 << 10)
         val secs2 = (System.nanoTime() - t2) / 1e9
         // roots untouched by any star edge label themselves (left join +
         // coalesce below) — only merged roots need rows here
@@ -181,6 +139,43 @@ object ConnectedComponents {
     // `labels` plan (same ownership rule as the loop's checkpointed state —
     // the caller's unpersist/clearCache releases it after the final action)
     Result(labels, phase1Metric +: phase2Metrics)
+  }
+
+  /** Union-by-min, path-compressed union-find over an edge stream (phase 1
+    * per partition, phase 2 on the driver). The surviving root is always
+    * the smaller id, so each vertex's root is exactly the min id of its
+    * component. Returns (vertex, root) for every vertex seen, and the edge
+    * count. Parent map: primitive open addressing, 16 B/slot, <= 23
+    * B/vertex at the 0.7 load ceiling (vs ~60-80 B/entry for a boxed
+    * j.u.HashMap) — the memory bound of the phase-1 contraction, which
+    * must fit executor memory at the 100 TB design point. */
+  private def minRoots(
+      edges: Iterator[(Long, Long)],
+      capacity: Int): (ArrayBuffer[(Long, Long)], Long) = {
+    val parent = new LongLongMap(capacity)
+    def find(a: Long): Long = {
+      var r = a
+      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+      var c = a
+      while (c != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
+      r
+    }
+    var nE = 0L
+    while (edges.hasNext) {
+      val e = edges.next()
+      val s = e._1; val d = e._2
+      if (!parent.contains(s)) parent.put(s, s)
+      if (!parent.contains(d)) parent.put(d, d)
+      val rs = find(s); val rd = find(d)
+      if (rs < rd) parent.put(rd, rs)
+      else if (rd < rs) parent.put(rs, rd)
+      nE += 1
+    }
+    val out = new ArrayBuffer[(Long, Long)](parent.size)
+    // find() inside foreach only path-compresses (puts to EXISTING keys:
+    // no insert, no growth), so the key-array iteration stays valid
+    parent.foreach { (v, _) => out += ((v, find(v))) }
+    (out, nE)
   }
 
   /** Min-label propagation WITH Shiloach-Vishkin-style pointer jumping over

@@ -42,8 +42,7 @@ object PageRank {
       cfg: IterConfig = IterConfig(),
       weighted: Boolean = true,
       strategy: GatherStrategy = GatherStrategy.Auto(),
-      resumeFrom: Option[(DataFrame, Int)] = None,
-      bucketed: Boolean = false): Result = {
+      resumeFrom: Option[(DataFrame, Int)] = None): Result = {
     val resolved = GatherStrategy.resolve(strategy, nVertices)
     // r06 (guide §1.2 "the distributed algorithm first"): Auto in the
     // broadcast regime routes to the flat-CSR broadcast-array kernel —
@@ -52,13 +51,13 @@ object PageRank {
     // broadcast-join plan (r05 bench: 0.38 s/iter DF vs 0.03-0.09 s/iter
     // array at these shapes). Guards: an EXPLICIT BroadcastState request
     // keeps the DataFrame plan (tests and lanes that exist to measure that
-    // plan), resume and bucketed builds stay on the DataFrame path, and
+    // plan), resume stays on the DataFrame path, and
     // Auto's own maxBroadcastVertices bound keeps the kernel inside its
     // V-fits-in-memory contract.
     strategy match {
       case GatherStrategy.Auto(_)
           if resolved == GatherStrategy.BroadcastState &&
-            resumeFrom.isEmpty && !bucketed =>
+            resumeFrom.isEmpty =>
         return PageRankArray.run(spark, edges, nVertices, damping, cfg, weighted)
       case _ => ()
     }
@@ -105,18 +104,6 @@ object PageRank {
       case GatherStrategy.BroadcastState => "dst"
       case _                             => "src"
     }
-    // Two physical homes for the one-time CSR build:
-    //   - bucketed=false: columnar cache (InMemoryRelation). Fastest to
-    //     build; per-iteration scans pay columnar decompression, which is
-    //     allocation-heavy and contends at high thread counts.
-    //   - bucketed=true: a BUCKETED parquet table. The per-iteration scan is
-    //     the vectorized parquet reader (Spark's cheapest scan) served from
-    //     the OS page cache, and the bucket metadata preserves the
-    //     HashPartitioning guarantee, so the gather aggregation still needs
-    //     no shuffle. This is also the shape a real cluster wants: a
-    //     bucketed edge table on distributed storage that iterations scan
-    //     in place.
-    val bucketTable = s"graft_norm_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     // r06, ShuffleJoin cache only (guide §2.3): pin the partitioning on a
     // COARSENED src block (_blk = src div B, ~64 blocks/partition) instead
     // of hash(src). Joining on (_blk, src) is semantically identical (blk
@@ -130,26 +117,20 @@ object PageRank {
     // partitions at block granularity.
     val blkSize = math.max(1L, nVertices / (nParts.toLong * 64))
     val blockKey: Option[(String, Long)] = resolved match {
-      case GatherStrategy.ShuffleJoin if !bucketed => Some(("_blk", blkSize))
+      case GatherStrategy.ShuffleJoin => Some(("_blk", blkSize))
       case _ => None
     }
-    val norm =
-      if (bucketed) {
-        normBase.union(zeros).write.mode("overwrite")
-          .bucketBy(nParts, partKeyName)
-          .format("parquet").saveAsTable(bucketTable)
-        spark.table(bucketTable)
-      } else blockKey match {
-        case Some((blkCol, b)) =>
-          normBase.union(zeros)
-            .withColumn(blkCol, expr(s"src div $b"))
-            .repartition(nParts, col(blkCol))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        case None =>
-          normBase.union(zeros)
-            .repartition(nParts, col(partKeyName))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+    val norm = blockKey match {
+      case Some((blkCol, b)) =>
+        normBase.union(zeros)
+          .withColumn(blkCol, expr(s"src div $b"))
+          .repartition(nParts, col(blkCol))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+      case None =>
+        normBase.union(zeros)
+          .repartition(nParts, col(partKeyName))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+    }
     val nEdges = norm.count() - nVertices // real edges only, for throughput
 
     // Dangling vertex set (no out-edges), computed once. Their mass is
@@ -212,8 +193,7 @@ object PageRank {
     } finally spark.conf.set(coPartKey, coPartPrev)
     dangling.unpersist()
     outW.unpersist()
-    if (bucketed) spark.sql(s"DROP TABLE IF EXISTS $bucketTable")
-    else norm.unpersist()
+    norm.unpersist()
     Result(loop.state, loop.metrics, resolved)
   }
 }

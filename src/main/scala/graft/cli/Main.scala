@@ -28,16 +28,17 @@ object Main {
   }
 
   def session(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val b = SparkSession.builder().appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.session.timeZone", "UTC")
     val s = (if (sys.env.contains("SPARK_GRAFT_MASTER"))
       b.master(sys.env("SPARK_GRAFT_MASTER"))
     else if (!sys.props.contains("spark.master"))
-      b.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      b.master(s"local[$cpus]")
     else b).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.bench.StageLog.attach(s)

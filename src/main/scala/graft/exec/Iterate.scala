@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.nio.charset.StandardCharsets
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.model.IterationMetrics
 
 /** Iteration driver: convergence loop with lineage control and resumable
@@ -49,6 +49,8 @@ final case class IterConfig(
 final case class LoopResult(state: DataFrame, metrics: Seq[IterationMetrics])
 
 object Iterate {
+
+  private val json = new ObjectMapper()
 
   /** Join-free convergence delta over a MATERIALIZED (id, x, x_old) state:
     * an O(V) scan of the in-memory relation, partial-aggregated per
@@ -196,15 +198,16 @@ object Iterate {
   /** Durable snapshot: state parquet written to a temp dir then the manifest
     * moved into place atomically (temp + ATOMIC_MOVE) — a crashed writer can
     * never leave a manifest pointing at a half-written state
-    * (SURVEY.md §7.5.5). */
+    * (SURVEY.md §7.5.5). The manifest is real JSON, so any snapshot dir
+    * name round-trips. */
   def snapshot(dir: String, state: DataFrame, iteration: Int, delta: Double): Unit = {
     val statePath = s"$dir/state_$iteration"
     state.write.mode("overwrite").parquet(statePath)
-    val manifest =
-      s"""{"iteration":$iteration,"delta":$delta,"state_path":"$statePath"}"""
+    val manifest = json.createObjectNode()
+      .put("iteration", iteration).put("delta", delta).put("state_path", statePath)
     val tmp = Paths.get(s"$dir/.manifest.tmp")
     Files.createDirectories(Paths.get(dir))
-    Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, json.writeValueAsBytes(manifest))
     Files.move(tmp, Paths.get(s"$dir/manifest.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
@@ -214,13 +217,9 @@ object Iterate {
     val mf = Paths.get(s"$dir/manifest.json")
     if (!Files.exists(mf)) None
     else {
-      val json = new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
-      def field(name: String): String =
-        json.split(s""""$name":""")(1).split("[,}]")(0).trim.stripPrefix("\"").stripSuffix("\"")
-      val iter = field("iteration").toInt
-      val delta = field("delta").toDouble
-      val path = field("state_path")
-      Some((spark.read.parquet(path), iter, delta))
+      val m = json.readTree(mf.toFile)
+      Some((spark.read.parquet(m.get("state_path").asText),
+        m.get("iteration").asInt, m.get("delta").asDouble))
     }
   }
 }

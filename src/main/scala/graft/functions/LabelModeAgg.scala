@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.types._
 
 import graft.util.LongLongMap
@@ -40,21 +40,56 @@ case class LabelMode(
     isSelf: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[LabelMode.Hist]
-  with BinaryLike[Expression] with ImplicitCastInputTypes {
+  extends HistAggregate with BinaryLike[Expression] {
 
   override def inputTypes: Seq[org.apache.spark.sql.graft.bridge.AbstractDataType] =
     Seq(LongType, BooleanType)
-
   override def left: Expression = label
   override def right: Expression = isSelf
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): LabelMode =
     copy(label = newLeft, isSelf = newRight)
 
+  override def update(b: LabelMode.Hist, input: InternalRow): LabelMode.Hist =
+    addLabel(b, label, isSelf, input)
+
+  override def eval(b: LabelMode.Hist): Any = LabelMode.evalMode(b)
+
+  override def withNewMutableAggBufferOffset(off: Int): LabelMode =
+    copy(mutableAggBufferOffset = off)
+  override def withNewInputAggBufferOffset(off: Int): LabelMode =
+    copy(inputAggBufferOffset = off)
+
+  override def dataType: DataType = LabelMode.modeType
+  override def prettyName: String = "label_mode"
+}
+
+/** The buffer plumbing the three histogram aggregates share: one
+  * [[LabelMode.Hist]] per group, histograms summed on merge, and one
+  * little-endian wire format (partial-agg buffers cross executor
+  * boundaries). Subclasses supply their inputs, `update`, `eval`,
+  * `dataType` and name. */
+abstract class HistAggregate
+  extends TypedImperativeAggregate[LabelMode.Hist] with ImplicitCastInputTypes {
+
   override def createAggregationBuffer(): LabelMode.Hist = new LabelMode.Hist
 
-  override def update(b: LabelMode.Hist, input: InternalRow): LabelMode.Hist = {
+  override def merge(b: LabelMode.Hist, o: LabelMode.Hist): LabelMode.Hist = {
+    o.counts.foreach { (k, v) => b.counts.addTo(k, v); () }
+    if (o.ownSet) { b.own = o.own; b.ownSet = true }
+    b
+  }
+
+  override def serialize(b: LabelMode.Hist): Array[Byte] = LabelMode.serializeHist(b)
+  override def deserialize(bytes: Array[Byte]): LabelMode.Hist =
+    LabelMode.deserializeInto(new LabelMode.Hist, bytes)
+
+  override def nullable: Boolean = false
+
+  /** `update` for a (label, isSelf) input row: the self row sets the
+    * group's own label, every other row counts its label. */
+  protected def addLabel(b: LabelMode.Hist, label: Expression, isSelf: Expression,
+      input: InternalRow): LabelMode.Hist = {
     val l = label.eval(input)
     val s = isSelf.eval(input)
     if (l != null) {
@@ -64,32 +99,6 @@ case class LabelMode(
     }
     b
   }
-
-  override def merge(b: LabelMode.Hist, o: LabelMode.Hist): LabelMode.Hist = {
-    o.counts.foreach { (k, v) => b.counts.addTo(k, v); () }
-    if (o.ownSet) { b.own = o.own; b.ownSet = true }
-    b
-  }
-
-  override def eval(b: LabelMode.Hist): Any = LabelMode.evalMode(b)
-
-  // little-endian pinned: partial-agg buffers cross executor boundaries
-  override def serialize(b: LabelMode.Hist): Array[Byte] =
-    LabelMode.serializeHist(b)
-
-  override def deserialize(bytes: Array[Byte]): LabelMode.Hist =
-    LabelMode.deserializeInto(new LabelMode.Hist, bytes)
-
-  override def withNewMutableAggBufferOffset(off: Int): LabelMode =
-    copy(mutableAggBufferOffset = off)
-  override def withNewInputAggBufferOffset(off: Int): LabelMode =
-    copy(inputAggBufferOffset = off)
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = StructType(Seq(
-    StructField("x", LongType, nullable = false),
-    StructField("x_old", LongType, nullable = false)))
-  override def prettyName: String = "label_mode"
 }
 
 object LabelMode {
@@ -102,6 +111,12 @@ object LabelMode {
     var own: Long = 0L
     var ownSet: Boolean = false
   }
+
+  /** struct(x = mode, x_old = own label): [[LabelMode]] and
+    * [[LabelModeMerge]] results. */
+  private[functions] val modeType: DataType = StructType(Seq(
+    StructField("x", LongType, nullable = false),
+    StructField("x_old", LongType, nullable = false)))
 
   private[functions] def serializeHist(b: Hist): Array[Byte] = {
     val bb = ByteBuffer.allocate(1 + 8 + 4 + b.counts.size * 16)
@@ -176,8 +191,7 @@ case class LabelHist(
     isSelf: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[LabelMode.Hist]
-  with BinaryLike[Expression] with ImplicitCastInputTypes {
+  extends HistAggregate with BinaryLike[Expression] {
 
   override def inputTypes: Seq[org.apache.spark.sql.graft.bridge.AbstractDataType] =
     Seq(LongType, BooleanType)
@@ -187,35 +201,16 @@ case class LabelHist(
       newLeft: Expression, newRight: Expression): LabelHist =
     copy(label = newLeft, isSelf = newRight)
 
-  override def createAggregationBuffer(): LabelMode.Hist = new LabelMode.Hist
-
-  override def update(b: LabelMode.Hist, input: InternalRow): LabelMode.Hist = {
-    val l = label.eval(input)
-    val s = isSelf.eval(input)
-    if (l != null) {
-      val lv = l.asInstanceOf[Long]
-      if (s != null && s.asInstanceOf[Boolean]) { b.own = lv; b.ownSet = true }
-      else b.counts.addTo(lv, 1L)
-    }
-    b
-  }
-
-  override def merge(b: LabelMode.Hist, o: LabelMode.Hist): LabelMode.Hist = {
-    o.counts.foreach { (k, v) => b.counts.addTo(k, v); () }
-    if (o.ownSet) { b.own = o.own; b.ownSet = true }
-    b
-  }
+  override def update(b: LabelMode.Hist, input: InternalRow): LabelMode.Hist =
+    addLabel(b, label, isSelf, input)
 
   override def eval(b: LabelMode.Hist): Any = LabelMode.serializeHist(b)
-  override def serialize(b: LabelMode.Hist): Array[Byte] = LabelMode.serializeHist(b)
-  override def deserialize(bytes: Array[Byte]): LabelMode.Hist =
-    LabelMode.deserializeInto(new LabelMode.Hist, bytes)
 
   override def withNewMutableAggBufferOffset(off: Int): LabelHist =
     copy(mutableAggBufferOffset = off)
   override def withNewInputAggBufferOffset(off: Int): LabelHist =
     copy(inputAggBufferOffset = off)
-  override def nullable: Boolean = false
+
   override def dataType: DataType = BinaryType
   override def prettyName: String = "label_hist"
 }
@@ -229,9 +224,7 @@ case class LabelModeMerge(
     hist: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[LabelMode.Hist]
-  with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression]
-  with ImplicitCastInputTypes {
+  extends HistAggregate with UnaryLike[Expression] {
 
   override def inputTypes: Seq[org.apache.spark.sql.graft.bridge.AbstractDataType] =
     Seq(BinaryType)
@@ -239,32 +232,19 @@ case class LabelModeMerge(
   override protected def withNewChildInternal(newChild: Expression): LabelModeMerge =
     copy(hist = newChild)
 
-  override def createAggregationBuffer(): LabelMode.Hist = new LabelMode.Hist
-
   override def update(b: LabelMode.Hist, input: InternalRow): LabelMode.Hist = {
     val v = hist.eval(input)
     if (v != null) LabelMode.deserializeInto(b, v.asInstanceOf[Array[Byte]])
     b
   }
 
-  override def merge(b: LabelMode.Hist, o: LabelMode.Hist): LabelMode.Hist = {
-    o.counts.foreach { (k, v) => b.counts.addTo(k, v); () }
-    if (o.ownSet) { b.own = o.own; b.ownSet = true }
-    b
-  }
-
   override def eval(b: LabelMode.Hist): Any = LabelMode.evalMode(b)
-  override def serialize(b: LabelMode.Hist): Array[Byte] = LabelMode.serializeHist(b)
-  override def deserialize(bytes: Array[Byte]): LabelMode.Hist =
-    LabelMode.deserializeInto(new LabelMode.Hist, bytes)
 
   override def withNewMutableAggBufferOffset(off: Int): LabelModeMerge =
     copy(mutableAggBufferOffset = off)
   override def withNewInputAggBufferOffset(off: Int): LabelModeMerge =
     copy(inputAggBufferOffset = off)
-  override def nullable: Boolean = false
-  override def dataType: DataType = StructType(Seq(
-    StructField("x", LongType, nullable = false),
-    StructField("x_old", LongType, nullable = false)))
+
+  override def dataType: DataType = LabelMode.modeType
   override def prettyName: String = "label_mode_merge"
 }

@@ -17,24 +17,6 @@ import java.sql.Timestamp
   * (`/root/reference/include/graphCOO.hpp:10-13`). */
 final case class Edge(src: Long, dst: Long, w: Double)
 
-/** Unweighted edge used by algorithms that ignore weights (CC, LP, triangles). */
-final case class Link(src: Long, dst: Long)
-
-/** Per-vertex state vector entry — the reference's `weights[i]` input /
-  * `flow[i]` output (`/root/reference/include/graphCOO.hpp:20-21`). */
-final case class VertexState(id: Long, x: Double)
-
-/** CSR-like adjacency row: all out-neighbors of `src` with weights, sorted by
-  * dst. Maps the reference's CSR layout (`/root/reference/include/graphCSR.hpp:382-384`:
-  * csrRowPtr/csrColInd/csrVal) onto a grouped, columnar Dataset row. Built once
-  * (one shuffle), persisted, reused every iteration. */
-final case class Adjacency(src: Long, dsts: Array[Long], ws: Array[Double])
-
-/** In-neighbor-oriented adjacency (the reference's transpose, C2:
-  * `/root/reference/include/graphCOO.hpp:141-150`) — gather-by-dst form used
-  * by PageRank. */
-final case class InAdjacency(dst: Long, srcs: Array[Long], ws: Array[Double])
-
 /** Common-Crawl-style page row per BASELINE.json `input_hint`. */
 final case class Page(
     url: String,
@@ -42,9 +24,6 @@ final case class Page(
     html: Array[Byte],
     text: String,
     lang: String)
-
-/** Vertex dictionary entry: url -> dense Long id (0-based, contiguous). */
-final case class VertexId(url: String, id: Long)
 
 /** Per-iteration execution metrics (north rule: throughput, shuffle-bytes,
   * and skew emitted per iteration). `shuffleReadBytes`/`shuffleWriteBytes`
@@ -61,15 +40,3 @@ final case class IterationMetrics(
     shuffleReadBytes: Long = -1L,
     shuffleWriteBytes: Long = -1L,
     taskSkew: Double = Double.NaN)
-
-/** Degree-distribution skew statistics
-  * (reference analog: max row degree tracked during CSR build,
-  * `/root/reference/include/graphCSR.hpp:464-467`, avg row length
-  * `/root/reference/perf_compare/perf_compare.cpp:427-428`). */
-final case class SkewStats(
-    vertices: Long,
-    edges: Long,
-    maxDegree: Long,
-    avgDegree: Double,
-    p50Degree: Double,
-    p99Degree: Double)

@@ -55,12 +55,15 @@ class ResumeSpec extends SparkSuite {
   }
 
   test("snapshot manifest is written atomically and parses back") {
-    val dir = Files.createTempDirectory("graft-manifest").toString
+    val base = Files.createTempDirectory("graft-manifest").toString
     val st = Seq((0L, 0.5), (1L, 0.5)).toDF("id", "x")
-    Iterate.snapshot(dir, st, iteration = 7, delta = 0.123)
-    val Some((loaded, iter, delta)) = Iterate.resume(spark, dir)
-    assert(iter == 7 && math.abs(delta - 0.123) < 1e-12)
-    assert(loaded.as[(Long, Double)].collect().toSet == Set((0L, 0.5), (1L, 0.5)))
+    // the second dir name holds the JSON delimiters ',' and '}'
+    for (dir <- Seq(base, s"$base/graft,snap}x")) {
+      Iterate.snapshot(dir, st, iteration = 7, delta = 0.123)
+      val Some((loaded, iter, delta)) = Iterate.resume(spark, dir)
+      assert(iter == 7 && math.abs(delta - 0.123) < 1e-12, dir)
+      assert(loaded.as[(Long, Double)].collect().toSet == Set((0L, 0.5), (1L, 0.5)), dir)
+    }
   }
 
   test("Iterate.loop rejects a step without x_old, naming the column") {

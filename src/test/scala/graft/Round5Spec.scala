@@ -165,6 +165,22 @@ class Round5Spec extends SparkSuite {
     assert(got(0L) === ((3L, 99L)))
     assert(got(1L) === ((42L, 42L)))
     assert(got(2L) === ((1L, 9L)))
+    // the same rows through the salted two-phase form (labelHist per
+    // (src, salt), then labelModeMerge per src): label 3 is split across
+    // both salts and label 5 sits inside one, so only a correct cross-salt
+    // merge reaches the 5-vs-3 tie -> 3
+    val salted = Seq(
+      (0L, 5L, false, 0), (0L, 5L, false, 0), (0L, 3L, false, 0), (0L, 3L, false, 1),
+      (0L, 7L, false, 1), (0L, 99L, true, 1),
+      (1L, 42L, true, 0),
+      (2L, 9L, true, 0), (2L, 1L, false, 1)).toDF("src", "x", "self", "salt")
+    val merged = salted.groupBy("src", "salt")
+      .agg(graft.functions.LabelMode.labelHist(col("x"), col("self")).as("h"))
+      .groupBy("src")
+      .agg(graft.functions.LabelMode.labelModeMerge(col("h")).as("m"))
+      .select(col("src"), col("m.x"), col("m.x_old"))
+      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
+    assert(merged === got)
   }
 
   test("LP per-round plan: ONE aggregate, no groupBy(src,label) double shuffle") {
